@@ -490,13 +490,22 @@ class TestDvUpdate:
         assert t3.to_df().count() == 150
         assert t3.to_df().filter("idx < 50").count() == 0
 
-    def test_no_match_is_noop(self, spark, tmp_table_dir):
+    def test_no_match_is_noop(self, spark, tmp_table_dir, monkeypatch):
         t = self._table(spark, tmp_table_dir)
         v = t.version
+        writes = []
+        monkeypatch.setattr(DeltaTable, "_write_data",
+                            lambda self, *a, **k: writes.append(a) or [])
         t2 = t.update({"f64": "0.0"}, where="idx > 10000",
                       mode="merge-on-read")
         assert t2.to_df().count() == 200
         assert t2.to_df().filter("f64 = 0.0").count() == 0
+        # stats cannot prune this one: the files are scanned, and since
+        # masking runs first no post-image file is ever written
+        t3 = t2.update({"f64": "0.0"}, where="idx % 1000 = 999",
+                       mode="merge-on-read")
+        assert writes == []
+        assert t3.to_df().filter("f64 = 0.0").count() == 0
 
     def test_describe_detail_surfaces_dv_counts(self, spark,
                                                  tmp_table_dir):
@@ -624,3 +633,66 @@ class TestPackedDvFile:
         assert add.stats_dict.get("tightBounds") is False
         # min/max survive for (conservative) skipping
         assert "minValues" in add.stats_dict
+
+
+_DML_WHERE = {"partial": "id < 30", "certain": "part = 'a'", "all": None}
+
+
+class TestDmlMetricsMatchObserved:
+    """DELETE and UPDATE share one row-level path. In both modes, on
+    clean and on deletion-vector-bearing target files, the commit's
+    history() metrics must equal what it observably did: the live
+    row-count delta and the add/remove actions of its log entry."""
+
+    @pytest.mark.parametrize("op,mode,target,where", [
+        pytest.param(op, mode, target, where,
+                     id=f"{op}-{mode}-{target}-{where}")
+        for op in ("delete", "update")
+        for mode in ("copy-on-write", "merge-on-read")
+        for target in ("clean", "dv")
+        for where in _DML_WHERE
+        if not (op == "update" and where == "all")])
+    def test_history_metrics_match_observed(self, spark, tmp_table_dir,
+                                            op, mode, target, where):
+        import pandas as pd
+        pdf = pd.DataFrame({"id": range(100)})
+        pdf["part"] = ["a" if i < 50 else "b" for i in pdf["id"]]
+        pdf["val"] = pdf["id"].astype("float64")
+        t = DeltaTable(spark, tmp_table_dir).write(
+            spark.createDataFrame(pdf).coalesce(1), partition_by=["part"])
+        assert len(t.adds) == 2                   # one file per partition
+        if target == "dv":
+            t = t.delete("id % 10 = 0", mode="merge-on-read")
+            assert all((a.extra or {}).get("deletionVector")
+                       for a in t.adds.values())
+        pred = _DML_WHERE[where]
+        before = t.to_df().count()
+        matched = t.to_df().filter(pred or "true").count()
+
+        if op == "delete":
+            t2 = t.delete(pred, mode=mode)
+        else:
+            t2 = t.update({"val": "val + 1000"}, where=pred, mode=mode)
+        m = {k: int(v)
+             for k, v in next(t2.history())["operationMetrics"].items()}
+        after = t2.to_df().count()
+        log = f"{tmp_table_dir}/_delta_log/{t2.version:020d}.json"
+        actions = [json.loads(line) for line in open(log)]
+        adds = [a["add"] for a in actions if "add" in a]
+        removed = {a["remove"]["path"] for a in actions if "remove" in a}
+        readds = [a for a in adds if a["path"] in removed]    # new DV
+        new_files = [a for a in adds if a["path"] not in removed]
+        written = sum(json.loads(a["stats"])["numRecords"]
+                      for a in new_files)
+
+        assert m["num_added_files"] == len(new_files)
+        assert m["num_removed_files"] == len(removed) - len(readds)
+        assert m.get("num_deletion_vectors_added", 0) == len(readds)
+        if op == "delete":
+            assert m["num_deleted_rows"] == before - after == matched
+            assert m["num_copied_rows"] == written
+        else:
+            assert after == before
+            assert m["num_updated_rows"] == matched \
+                == t2.to_df().filter("val >= 1000").count()
+            assert m["num_copied_rows"] + m["num_updated_rows"] == written

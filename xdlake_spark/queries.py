@@ -1029,10 +1029,11 @@ WHERE NOT (l_quantity > 45 AND l_returnflag = 'A')
   AND NOT (l_quantity < 3)
 """)
 def delta_delete_dv_q(spark, sf_dir):
-    """Merge-on-read DELETE via deletion vectors (table.py _dv_delete):
-    NO data file is rewritten — each hit file gets a roaring bitmap of
-    deleted positions (spec DV layout, log/dv.py) and is re-added with
-    the descriptor; two successive deletes union their bitmaps. The
+    """Merge-on-read DELETE via deletion vectors (table.py
+    _rewrite_rows, the shared DELETE/UPDATE path): NO data file is
+    rewritten — each hit file gets a roaring bitmap of deleted
+    positions (spec DV layout, log/dv.py) and is re-added with the
+    descriptor; two successive deletes union their bitmaps. The
     oracle is the plain survivor SELECT, so the scan's position
     anti-join must reproduce row-exact SQL delete semantics."""
     from .table import DeltaTable
@@ -1140,11 +1141,12 @@ SELECT l_orderkey, l_linenumber,
 FROM lineitem
 """)
 def delta_update_dv_q(spark, sf_dir):
-    """Merge-on-read UPDATE (table.py _dv_update): deletion vectors
-    mask the old versions of matching rows; ONLY the transformed rows
-    append as new files — untouched rows of hit files are never
-    rewritten. Same oracle as the copy-on-write variant: the two
-    strategies must be observationally identical."""
+    """Merge-on-read UPDATE (table.py _rewrite_rows, the shared
+    DELETE/UPDATE path): deletion vectors mask the old versions of
+    matching rows; ONLY the transformed rows append as new files —
+    untouched rows of hit files are never rewritten. Same oracle as
+    the copy-on-write variant: the two strategies must be
+    observationally identical."""
     from .table import DeltaTable
     li = _t(spark, sf_dir, "lineitem")
     t = DeltaTable(spark, _delta_tmp()).write(

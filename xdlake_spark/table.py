@@ -2217,28 +2217,13 @@ class DeltaTable:
             certain, rest = split_certain_matches(
                 candidates, where_sql, self.partition_columns,
                 self._partition_types())
-        removes = [a.to_remove() for a in certain.values()]
+        hit_adds, n_matched, n_live = self._hit_files(rest, pred)
         survivor_adds: list[Add] = []
-        if rest:
-            rel_of = self._rel_by_uri(rest)
-            per_file = (self._scan(rest)
-                        .withColumn("__xdl_file", F.input_file_name())
-                        .groupBy("__xdl_file")
-                        .agg(F.count(F.lit(1)).alias("total"),
-                             F.sum(pred.cast("long")).alias("hits"))
-                        .collect())
-            hit_rels = [rel_of(r["__xdl_file"]) for r in per_file
-                        if (r["hits"] or 0) > 0]
-            n_survivors = sum(int(r["total"]) - int(r["hits"] or 0)
-                              for r in per_file if (r["hits"] or 0) > 0)
-            if hit_rels:
-                hit_adds = {r: self.adds[r] for r in hit_rels}
-                if n_survivors > 0:
-                    survivor_adds = self._write_data(
-                        self._scan(hit_adds).filter(~pred),
-                        self.partition_columns)
-                removes.extend(self.adds[r].to_remove()
-                               for r in hit_rels)
+        if n_live > n_matched:
+            survivor_adds = self._write_data(
+                self._scan(hit_adds).filter(~pred), self.partition_columns)
+        removes = [a.to_remove()
+                   for a in (*certain.values(), *hit_adds.values())]
         md = replaced_metadata(self.log.metadata(), schema,
                                partition_by)
         commit = TableCommit.write(mode=WriteMode.overwrite.value,
@@ -3327,7 +3312,7 @@ class DeltaTable:
                     raise
         raise AssertionError("unreachable")
 
-    # -- delete (copy-on-write) -------------------------------------------------
+    # -- row-level DML: delete / update -----------------------------------------
 
     def delete(self, where: "str | Column | None" = None,
                custom_metadata: dict | None = None,
@@ -3354,146 +3339,178 @@ class DeltaTable:
         - ``"auto"`` (default): merge-on-read when the table property
           ``delta.enableDeletionVectors`` is ``true`` (the delta-spark
           opt-in convention), copy-on-write otherwise.
+
+        In every mode a file whose partition values prove that all its
+        rows match (every file, for ``where=None``) is tombstoned from
+        the manifest alone — except for a predicate delete on a
+        change-data-feed table, which scans to record the deleted rows.
         """
         self._require_mutable("DELETE")
         if self.schema is None:
             raise ValueError(f"No delta table at {self.location.url}")
+        return self._rewrite_rows(where, None, custom_metadata, mode)
+
+    def _rewrite_rows(self, where: "str | Column | None",
+                      set_: "dict[str, str] | None",
+                      custom_metadata: dict | None,
+                      mode: str) -> "DeltaTable":
+        """The one row-level path behind :meth:`delete` (``set_`` is
+        None) and :meth:`update`, in Delta's three DML steps: find the
+        files holding matching rows, rewrite them (copy-on-write) or
+        mask the rows with deletion vectors (merge-on-read), and commit
+        once with logical conflict detection."""
+        op = "delete" if set_ is None else "update"
         if mode not in ("auto", "copy-on-write", "merge-on-read"):
-            raise ValueError(f"unknown delete mode {mode!r}")
+            raise ValueError(f"unknown {op} mode {mode!r}")
         if mode == "auto":
             cfg = self.log.metadata().configuration or {}
-            mode = "merge-on-read" \
-                if str(cfg.get("delta.enableDeletionVectors", "false")
-                       ).lower() == "true" else "copy-on-write"
+            dv_on = str(cfg.get("delta.enableDeletionVectors", "false")
+                        ).lower() == "true"
             # icebergCompatV2 forbids DV writes — auto falls back to
             # copy-on-write instead of failing at commit (an explicit
             # mode="merge-on-read" still fails loudly there)
-            if mode == "merge-on-read" and self.iceberg_compat_enabled:
-                mode = "copy-on-write"
+            mode = "merge-on-read" \
+                if dv_on and not self.iceberg_compat_enabled \
+                else "copy-on-write"
         read_version = self.version
-
-        if where is None:
-            removes = [a.to_remove() for a in self.adds.values()]
-            deleted = sum((a.stats_dict or {}).get("numRecords", 0)
-                          for a in self.adds.values())
-            metrics = {
-                "num_added_files": 0,
-                "num_removed_files": len(removes),
-                "num_copied_rows": 0,
-                "num_deleted_rows": deleted,
-            }
-            entry = delete_table_entry([], removes, "true", read_version,
-                                       metrics, custom_metadata)
-            return self._commit_checked(entry, read_version)
-
         where_sql = where if isinstance(where, str) else None
-        pred = F.expr(where) if isinstance(where, str) else where
-        pred = F.coalesce(pred, F.lit(False))  # null predicate keeps the row
-
+        if where is None:
+            pred = F.lit(True)
+        else:
+            pred = F.expr(where) if where_sql else where
+            pred = F.coalesce(pred, F.lit(False))  # null pred skips row
         candidates = self._pruned_adds(where_sql) \
             if where_sql else dict(self.adds)
-        if not candidates:
-            entry = delete_table_entry(
-                [], [], where_sql or "<expr>", read_version,
-                {"num_added_files": 0, "num_removed_files": 0,
-                 "num_copied_rows": 0, "num_deleted_rows": 0},
-                custom_metadata)
-            return self._commit_checked(entry, read_version,
-                                        where_sql=where_sql)
 
-        # Metadata-only fast path (delta-spark's partition-predicate
-        # DELETE): a file whose PARTITION VALUES prove every row matches
+        # Metadata-only DELETE (delta-spark's partition-predicate
+        # path): a file whose PARTITION VALUES prove every row matches
         # is tombstoned straight from the manifest — no scan, no
         # rewrite, no DV. `DELETE WHERE date_part < '2023-01'` on a
         # 100 TB date-partitioned table is a pure log commit with ZERO
         # Spark jobs. Files without a usable live-row count fall back
         # to the scanning path so numDeletedRows stays exact; CDF
-        # tables always scan (the change feed must materialize the
-        # deleted rows anyway).
+        # tables scan predicate deletes (the change feed must
+        # materialize the deleted rows anyway).
         certain: dict[str, Add] = {}
-        rest = candidates
-        if where_sql and not self.cdf_enabled:
-            certain, rest = split_certain_matches(
-                candidates, where_sql, self.partition_columns,
-                self._partition_types())
-            unknown = {p for p, a in certain.items()
-                       if self._live_row_count(a) is None}
-            if unknown:
-                rest = {**rest,
-                        **{p: certain[p] for p in unknown}}
-                certain = {p: a for p, a in certain.items()
-                           if p not in unknown}
-        meta_removes = [a.to_remove() for a in certain.values()]
-        n_meta = sum(self._live_row_count(a) for a in certain.values())
+        if op == "delete" and (
+                where is None or (where_sql and not self.cdf_enabled)):
+            certain, candidates = (candidates, {}) if where is None \
+                else split_certain_matches(
+                    candidates, where_sql, self.partition_columns,
+                    self._partition_types())
+            for p in [p for p, a in certain.items()
+                      if self._live_row_count(a) is None]:
+                candidates[p] = certain.pop(p)
 
-        if certain and not rest:
-            metrics = {
-                "num_added_files": 0,
-                "num_removed_files": len(meta_removes),
-                "num_copied_rows": 0,
-                "num_deleted_rows": int(n_meta),
-            }
-            entry = delete_table_entry([], meta_removes,
-                                       where_sql, read_version,
-                                       metrics, custom_metadata)
-            return self._commit_checked(entry, read_version,
-                                        where_sql=where_sql)
+        # a delete-all tombstones every file, it never masks
+        masked = (mode == "merge-on-read" and bool(candidates)
+                  and not (op == "delete" and where is None))
+        dv_adds: list[Add] = []
+        if masked:
+            hit_adds, n_matched, dv_adds = \
+                self._dv_mask_files(candidates, pred)
+            n_live = n_matched           # masking copies no row
+        else:
+            hit_adds, n_matched, n_live = \
+                self._hit_files(candidates, pred)
 
-        if mode == "merge-on-read":
-            return self._dv_delete(rest, pred, where_sql,
-                                   read_version, custom_metadata,
-                                   certain=certain)
+        written: list[Add] = []
+        if op == "update" and hit_adds:
+            # merge-on-read appends only the post-images of the masked
+            # rows; copy-on-write rewrites the hit files whole
+            scan = self._scan(hit_adds)
+            post = self._set_projection(
+                scan.filter(pred) if masked else scan, set_, pred)
+            written = self._write_data(self._apply_constraints(post),
+                                       self.partition_columns)
+        elif n_live > n_matched:  # copy-on-write delete: the survivors
+            written = self._write_data(
+                self._scan(hit_adds).filter(~pred),
+                self.partition_columns)
 
-        rel_of = self._rel_by_uri(rest)
+        removes = [a.to_remove()
+                   for a in (*hit_adds.values(), *certain.values())]
+        n_copied = n_live - n_matched
+        n_matched += sum(self._live_row_count(a) for a in certain.values())
+        metrics = {"num_added_files": len(written),
+                   "num_removed_files": len(removes) - len(dv_adds)}
+        if op == "delete":
+            metrics.update(num_copied_rows=n_copied,
+                           num_deleted_rows=n_matched)
+        else:
+            metrics.update(num_updated_rows=n_matched,
+                           num_copied_rows=n_copied)
+        if masked and removes:
+            metrics["num_deletion_vectors_added"] = len(dv_adds)
+        make_entry = delete_table_entry if op == "delete" \
+            else update_table_entry
+        entry = make_entry(
+            [*dv_adds, *written], removes,
+            where_sql or ("true" if where is None else "<expr>"),
+            read_version, metrics, custom_metadata)
+        # the feature upgrade is only needed when a DV descriptor is
+        # actually committed — fully-masked and partition-certain files
+        # are merely tombstoned
+        proto_up = self._dv_protocol_action() if dv_adds else None
+        if proto_up is not None:
+            entry.actions.insert(0, proto_up)
+        if self.cdf_enabled and hit_adds and not certain:
+            # CDF: the changed rows become cdc files, so readers of this
+            # commit don't mis-derive spurious changes from its
+            # add/remove pairs. A commit that tombstones whole files
+            # from the manifest writes none: the feed derives those
+            # deletes from the removes.
+            matched = self._scan(hit_adds).filter(pred)
+            if op == "delete":
+                changes = matched.withColumn(self._CHANGE_TYPE,
+                                             F.lit("delete"))
+            else:
+                pre = matched.withColumn(self._CHANGE_TYPE,
+                                         F.lit("update_preimage"))
+                post = self._set_projection(matched, set_, pred) \
+                    .withColumn(self._CHANGE_TYPE,
+                                F.lit("update_postimage"))
+                changes = pre.unionByName(post)
+            entry.actions.extend(self._write_change_data(changes))
+        return self._commit_checked(entry, read_version,
+                                    where_sql=where_sql)
 
-        scan = self._scan(rest).withColumn(
-            "__xdl_file", F.input_file_name())
-        per_file = (scan.groupBy("__xdl_file")
+    def _hit_files(self, candidates: dict[str, Add], pred
+                   ) -> "tuple[dict[str, Add], int, int]":
+        """One aggregation job grouped on ``input_file_name()`` over the
+        candidate files (deletion-vector-masked rows excluded). Returns
+        the adds of the files holding at least one ``pred`` match, the
+        matched rows, and the live rows of those hit files."""
+        if not candidates:
+            return {}, 0, 0
+        rel_of = self._rel_by_uri(candidates)
+        per_file = (self._scan(candidates)
+                    .withColumn("__xdl_file", F.input_file_name())
+                    .groupBy("__xdl_file")
                     .agg(F.count(F.lit(1)).alias("total"),
                          F.sum(pred.cast("long")).alias("hits"))
                     .collect())  # one row per candidate file: driver-safe
+        hits = [r for r in per_file if (r["hits"] or 0) > 0]
+        hit_adds = {p: candidates[p]
+                    for p in sorted(rel_of(r["__xdl_file"]) for r in hits)}
+        return (hit_adds, sum(int(r["hits"]) for r in hits),
+                sum(int(r["total"]) for r in hits))
 
-        hit_rels = [rel_of(r["__xdl_file"]) for r in per_file
-                    if (r["hits"] or 0) > 0]
-        n_deleted = sum(int(r["hits"] or 0) for r in per_file) + n_meta
-        n_survivors = sum(int(r["total"]) - int(r["hits"] or 0)
-                          for r in per_file if (r["hits"] or 0) > 0)
-
-        if not hit_rels and not meta_removes:
-            entry = delete_table_entry(
-                [], [], where_sql or "<expr>", read_version,
-                {"num_added_files": 0, "num_removed_files": 0,
-                 "num_copied_rows": 0, "num_deleted_rows": 0},
-                custom_metadata)
-            return self._commit_checked(entry, read_version,
-                                        where_sql=where_sql)
-
-        hit_adds = {r: self.adds[r] for r in hit_rels}
-        new_adds: list[Add] = []
-        if n_survivors > 0:
-            survivors = self._scan(hit_adds).filter(~pred)
-            new_adds = self._write_data(survivors, self.partition_columns)
-
-        removes = [self.adds[r].to_remove() for r in hit_rels] \
-            + meta_removes
-        metrics = {
-            "num_added_files": len(new_adds),
-            "num_removed_files": len(removes),
-            "num_copied_rows": int(n_survivors),
-            "num_deleted_rows": int(n_deleted),
-        }
-        entry = delete_table_entry(new_adds, removes,
-                                   where_sql or "<expr>", read_version,
-                                   metrics, custom_metadata)
-        if self.cdf_enabled:
-            # CDF: record the deleted rows as change data — readers of
-            # this commit then use the cdc files instead of mis-deriving
-            # spurious changes from the copy-on-write add/remove pairs
-            deleted_rows = self._scan(hit_adds).filter(pred).withColumn(
-                self._CHANGE_TYPE, F.lit("delete"))
-            entry.actions.extend(self._write_change_data(deleted_rows))
-        return self._commit_checked(entry, read_version,
-                                    where_sql=where_sql)
+    def _set_projection(self, df: DataFrame, set_: dict[str, str],
+                        pred) -> DataFrame:
+        """UPDATE's post-image of ``df``: the SET expressions applied to
+        the ``pred``-matching rows (others keep their values), cast to
+        the column types, generated columns recomputed."""
+        sel = [F.when(pred, F.expr(set_[f.name])).otherwise(F.col(f.name))
+               .cast(f.dataType).alias(f.name)
+               if f.name in set_ else F.col(f.name)
+               for f in self.schema.fields]
+        # a SET may have changed a generated column's dependencies:
+        # recompute every generated column not explicitly SET
+        # (deterministic exprs leave untouched rows identical);
+        # explicitly-SET ones are verified against their expression
+        return self._apply_generated_columns(df.select(sel),
+                                             provided={*set_})
 
     def _dv_protocol_action(self) -> "Protocol | None":
         """Protocol upgrade for the first deletion-vector commit:
@@ -3555,11 +3572,13 @@ class DeltaTable:
         collects only (file, bitmap bytes, count), manifest-sized, not
         positions.  Per hit file: union with any existing DV, write the
         spec-layout ``.bin``, re-add the file with the descriptor
-        (stats kept — min/max stay conservative for skipping), and
-        tombstone the old add.  A file whose every physical row is
-        masked is tombstoned outright instead of carrying a 100%% DV.
+        (stats kept — min/max stay conservative for skipping).  A file
+        whose every physical row is masked gets no re-add (the caller
+        tombstones it) instead of carrying a 100%% DV.
 
-        Returns ``(new_adds, removes, n_hit_rows, hit_rels)``.
+        Returns ``(hit_adds, n_hit_rows, dv_adds)``: the current adds of
+        the hit files (all to be removed), the rows masked now, and the
+        re-adds carrying the merged DVs.
         """
         import dataclasses
 
@@ -3617,13 +3636,13 @@ class DeltaTable:
                                  "file string, dv binary, hits long")
                   .collect())  # one bitmap-sized row per hit file
 
-        removes = []
+        hit_adds: dict[str, Add] = {}
         n_hit = 0
         now = timestamp_ms()
         keep: list[tuple[Add, set]] = []     # (old add, merged indexes)
         for row in packed:
             rel = rel_of(row["file"])
-            old = self.adds[rel]
+            old = hit_adds[rel] = self.adds[rel]
             new_idx = deserialize_dv_data(bytes(row["dv"]))
             n_hit += int(row["hits"])
             old_desc = (old.extra or {}).get("deletionVector")
@@ -3631,7 +3650,6 @@ class DeltaTable:
             if old_desc:
                 all_idx |= set(int(i) for i in deleted_row_indexes(
                     self.location, old_desc))
-            removes.append(old.to_remove())
             total = (old.stats_dict or {}).get("numRecords")
             if total is not None and len(all_idx) >= int(total):
                 continue                   # fully masked: tombstone only
@@ -3657,8 +3675,7 @@ class DeltaTable:
                                 for k, v in (old.extra or {}).items()},
                              "deletionVector": desc}
             new_adds.append(add)
-        hit_rels = sorted(rel_of(r["file"]) for r in packed)
-        return new_adds, removes, n_hit, hit_rels
+        return hit_adds, n_hit, new_adds
 
     @staticmethod
     def _live_row_count(add: Add) -> "int | None":
@@ -3671,58 +3688,6 @@ class DeltaTable:
             return None
         desc = (add.extra or {}).get("deletionVector") or {}
         return int(nr) - int(desc.get("cardinality") or 0)
-
-    def _dv_delete(self, candidates: dict[str, Add], pred,
-                   where_sql: "str | None", read_version: int,
-                   custom_metadata: dict | None,
-                   certain: "dict[str, Add] | None" = None
-                   ) -> "DeltaTable":
-        """Merge-on-read DELETE: deletion-vector bitmaps instead of
-        rewriting data files (see :meth:`_dv_mask_files`). Files in
-        ``certain`` are fully covered by the predicate (proven from
-        partition values by the caller) and are tombstoned outright —
-        no scan, no pointless 100% DV."""
-        certain = certain or {}
-        meta_removes = [a.to_remove() for a in certain.values()]
-        n_meta = sum(self._live_row_count(a) for a in certain.values())
-        new_adds, removes, n_deleted, hit_rels = \
-            self._dv_mask_files(candidates, pred) if candidates \
-            else ([], [], 0, [])
-        if not hit_rels and not meta_removes:
-            entry = delete_table_entry(
-                [], [], where_sql or "<expr>", read_version,
-                {"num_added_files": 0, "num_removed_files": 0,
-                 "num_copied_rows": 0, "num_deleted_rows": 0},
-                custom_metadata)
-            return self._commit_checked(entry, read_version,
-                                        where_sql=where_sql)
-
-        removes = removes + meta_removes
-        metrics = {
-            "num_added_files": 0,
-            "num_removed_files": len(removes) - len(new_adds),
-            "num_copied_rows": 0,
-            "num_deleted_rows": int(n_deleted) + int(n_meta),
-            "num_deletion_vectors_added": len(new_adds),
-        }
-        entry = delete_table_entry(new_adds, removes,
-                                   where_sql or "<expr>", read_version,
-                                   metrics, custom_metadata)
-        # the feature upgrade is only needed when a DV descriptor is
-        # actually committed — a delete that merely tombstones files
-        # (fully-masked or partition-certain) adds no DV
-        proto_up = self._dv_protocol_action() if new_adds else None
-        if proto_up is not None:
-            entry.actions.insert(0, proto_up)
-        if self.cdf_enabled:
-            hit_adds = {r: self.adds[r] for r in hit_rels}
-            deleted_rows = self._scan(hit_adds).filter(pred).withColumn(
-                self._CHANGE_TYPE, F.lit("delete"))
-            entry.actions.extend(self._write_change_data(deleted_rows))
-        return self._commit_checked(entry, read_version,
-                                    where_sql=where_sql)
-
-    # -- update (copy-on-write) --------------------------------------------------
 
     def update(self, set: dict[str, str],
                where: "str | Column | None" = None,
@@ -3763,159 +3728,7 @@ class DeltaTable:
                 raise ValueError(
                     f"cannot UPDATE identity column {c!r} (Delta "
                     "identity semantics: values are system-maintained)")
-        read_version = self.version
-
-        where_sql = where if isinstance(where, str) else None
-        if where is None:
-            pred = F.lit(True)
-        else:
-            pred = F.expr(where) if isinstance(where, str) else where
-            pred = F.coalesce(pred, F.lit(False))  # null pred skips row
-
-        candidates = (self._pruned_adds(where_sql)
-                      if where_sql else self.adds)
-        if mode not in ("auto", "copy-on-write", "merge-on-read"):
-            raise ValueError(f"unknown update mode {mode!r}")
-        if mode == "auto":
-            cfg = self.log.metadata().configuration or {}
-            mode = "merge-on-read" \
-                if str(cfg.get("delta.enableDeletionVectors", "false")
-                       ).lower() == "true" else "copy-on-write"
-            # icebergCompatV2 forbids DV writes — auto falls back to
-            # copy-on-write (same rule as DELETE)
-            if mode == "merge-on-read" and self.iceberg_compat_enabled:
-                mode = "copy-on-write"
-        if mode == "merge-on-read" and candidates:
-            return self._dv_update(candidates, set, pred, where_sql,
-                                   read_version, custom_metadata)
-        rel_of = self._rel_by_uri(candidates)
-        n_updated = 0
-        hit_rels: list[str] = []
-        if candidates:
-            scan = self._scan(candidates).withColumn(
-                "__xdl_file", F.input_file_name())
-            per_file = (scan.groupBy("__xdl_file")
-                        .agg(F.sum(pred.cast("long")).alias("hits"))
-                        .collect())  # one row per candidate file
-            hit_rels = sorted(rel_of(r["__xdl_file"]) for r in per_file
-                              if (r["hits"] or 0) > 0)
-            n_updated = sum(int(r["hits"] or 0) for r in per_file)
-
-        new_adds: list[Add] = []
-        n_copied = 0
-        if hit_rels:
-            hit_adds = {r: self.adds[r] for r in hit_rels}
-            n_copied = sum((a.stats_dict or {}).get("numRecords", 0)
-                           for a in hit_adds.values()) - n_updated
-            out_cols = [f.name for f in self.schema.fields]
-            sel = []
-            for c in out_cols:
-                expr = (F.when(pred, F.expr(set[c]))
-                        .otherwise(F.col(c))
-                        .cast(self.schema[c].dataType).alias(c)
-                        if c in set else F.col(c))
-                sel.append(expr)
-            rewritten = self._scan(hit_adds).select(sel)
-            # a SET may have changed a generated column's dependencies:
-            # recompute every generated column not explicitly SET
-            # (deterministic exprs leave untouched rows identical);
-            # explicitly-SET ones are verified against their expression
-            rewritten = self._apply_generated_columns(
-                rewritten, provided={*set})  # `set` = the SET dict here
-            new_adds = self._write_data(self._apply_constraints(rewritten),
-                                        self.partition_columns)
-
-        removes = [self.adds[r].to_remove() for r in hit_rels]
-        metrics = {
-            "num_added_files": len(new_adds),
-            "num_removed_files": len(removes),
-            "num_updated_rows": int(n_updated),
-            "num_copied_rows": int(max(n_copied, 0)),
-        }
-        entry = update_table_entry(new_adds, removes,
-                                   where_sql or "true", read_version,
-                                   metrics, custom_metadata)
-        if self.cdf_enabled and hit_rels:
-            # CDF: pre- and post-images of exactly the matched rows
-            hit_adds_cdf = {r: self.adds[r] for r in hit_rels}
-            matched = self._scan(hit_adds_cdf).filter(pred)
-            pre = matched.withColumn(self._CHANGE_TYPE,
-                                     F.lit("update_preimage"))
-            out_cols = [f.name for f in self.schema.fields]
-            post = matched.select([
-                F.expr(set[c]).cast(self.schema[c].dataType).alias(c)
-                if c in set else F.col(c) for c in out_cols])
-            post = self._apply_generated_columns(post, provided={*set})
-            post = post.withColumn(self._CHANGE_TYPE,
-                                   F.lit("update_postimage"))
-            entry.actions.extend(
-                self._write_change_data(pre.unionByName(post)))
-        return self._commit_checked(entry, read_version,
-                                    where_sql=where_sql)
-
-    def _dv_update(self, candidates: dict[str, Add],
-                   set: dict[str, str], pred,
-                   where_sql: "str | None", read_version: int,
-                   custom_metadata: dict | None) -> "DeltaTable":
-        """Merge-on-read UPDATE: deletion vectors mask the old row
-        versions (:meth:`_dv_mask_files`); ONLY the transformed
-        matching rows are written out as new files — the non-matching
-        rows of hit files are never rewritten."""
-        hit_scan = self._scan(candidates).filter(pred)
-        out_cols = [f.name for f in self.schema.fields]
-        post = hit_scan.select([
-            F.expr(set[c]).cast(self.schema[c].dataType).alias(c)
-            if c in set else F.col(c) for c in out_cols])
-        post = self._apply_generated_columns(post, provided={*set})
-        appended = self._write_data(self._apply_constraints(post),
-                                    self.partition_columns)
-
-        dv_adds, removes, n_updated, hit_rels = \
-            self._dv_mask_files(candidates, pred)
-        if not hit_rels:
-            # no matching rows: drop the (empty) appended files
-            for a in appended:
-                loc = self.location.join(a.path)
-                if loc.exists():
-                    loc.delete()
-            entry = update_table_entry(
-                [], [], where_sql or "true", read_version,
-                {"num_added_files": 0, "num_removed_files": 0,
-                 "num_updated_rows": 0, "num_copied_rows": 0},
-                custom_metadata)
-            return self._commit_checked(entry, read_version,
-                                        where_sql=where_sql)
-
-        new_adds = [*dv_adds, *appended]
-        metrics = {
-            "num_added_files": len(appended),
-            "num_removed_files": len(removes) - len(dv_adds),
-            "num_updated_rows": int(n_updated),
-            "num_copied_rows": 0,
-            "num_deletion_vectors_added": len(dv_adds),
-        }
-        entry = update_table_entry(new_adds, removes,
-                                   where_sql or "true", read_version,
-                                   metrics, custom_metadata)
-        proto_up = self._dv_protocol_action()
-        if proto_up is not None:
-            entry.actions.insert(0, proto_up)
-        if self.cdf_enabled:
-            hit_adds_cdf = {r: self.adds[r] for r in hit_rels}
-            matched = self._scan(hit_adds_cdf).filter(pred)
-            pre = matched.withColumn(self._CHANGE_TYPE,
-                                     F.lit("update_preimage"))
-            post_cdf = matched.select([
-                F.expr(set[c]).cast(self.schema[c].dataType).alias(c)
-                if c in set else F.col(c) for c in out_cols])
-            post_cdf = self._apply_generated_columns(post_cdf,
-                                                     provided={*set})
-            post_cdf = post_cdf.withColumn(self._CHANGE_TYPE,
-                                           F.lit("update_postimage"))
-            entry.actions.extend(
-                self._write_change_data(pre.unionByName(post_cdf)))
-        return self._commit_checked(entry, read_version,
-                                    where_sql=where_sql)
+        return self._rewrite_rows(where, set, custom_metadata, mode)
 
     #: Deleted-position count above which the DV anti-join degrades
     #: from a driver-built broadcast to a shuffle join (every DV
