@@ -81,6 +81,16 @@ class TestGoldenFixtures:
         assert "minValues" in s and "nullCount" in s
 
 
+class TestPinnedVersionOnMissingLog:
+    def test_pinned_version_on_missing_log_raises(self, tmp_path):
+        loc = Location.resolve(str(tmp_path / "nothing" / "_delta_log"))
+        for v in (0, 99):
+            with pytest.raises(ValueError, match=f"Version {v} "):
+                DeltaLog.load(loc, version=v)
+        # unpinned, a missing log is still an empty table
+        assert not DeltaLog.load(loc)
+
+
 class TestActions:
     def test_registry_dispatch(self):
         a = load_action({"add": {"path": "x.parquet", "size": 1,

@@ -22,6 +22,8 @@ import pytest
 
 from xdlake_spark import queries as Q
 
+from .utils import jobs_during
+
 SF = "/root/testdata/sf0.001"
 
 
@@ -423,16 +425,6 @@ class TestRound10PlanShapes:
     fallback runs exactly ONE aggregation job no matter how many
     stat-less files the commit staged."""
 
-    def _jobs_during(self, spark, group, fn):
-        sc = spark.sparkContext
-        sc.setJobGroup(group, group)
-        try:
-            out = fn()
-        finally:
-            sc.setJobGroup(None, None)
-        return out, list(
-            sc.statusTracker().getJobIdsForGroup(group))
-
     def test_clustered_optimize_noop_runs_zero_jobs(self, spark,
                                                     tmp_path):
         from xdlake_spark import DeltaTable
@@ -443,7 +435,7 @@ class TestRound10PlanShapes:
         t = t.cluster_by(["a", "b"])
         t = t.optimize(target_file_size=1 << 14, min_cube_size=0)
         v = t.version
-        t2, jobs = self._jobs_during(
+        t2, jobs = jobs_during(
             spark, "opt-noop",
             lambda: t.optimize(target_file_size=1 << 14,
                                min_cube_size=0))
@@ -468,7 +460,7 @@ class TestRound10PlanShapes:
             assert len(adds) == n_files
             for a in adds:
                 a.stats = None
-            _, jobs = self._jobs_during(
+            _, jobs = jobs_during(
                 spark, tag,
                 lambda: t._stats_via_spark(
                     adds, t.to_df().schema, []))

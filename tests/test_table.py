@@ -16,7 +16,7 @@ from xdlake_spark import CommitConflictError, DeltaTable
 from xdlake_spark.log import DeltaLog
 from xdlake_spark.sources.storage import Location
 
-from .utils import assert_frames_equivalent, gen_pdf
+from .utils import assert_frames_equivalent, gen_pdf, jobs_during
 
 
 def write_rounds(spark, loc, n_rounds=3, partition_by=None, **kw):
@@ -3228,15 +3228,6 @@ class TestMetadataOnlyJobCounts:
     """Round-10 metadata ops must stay job-free on the driver:
     partitions() and verify_checksum() run zero Spark jobs."""
 
-    def _jobs_during(self, spark, group, fn):
-        sc = spark.sparkContext
-        sc.setJobGroup(group, "must be job-free")
-        try:
-            out = fn()
-        finally:
-            sc.setJobGroup(None, None)
-        return out, list(sc.statusTracker().getJobIdsForGroup(group))
-
     def test_partitions_is_zero_jobs(self, spark, lineitem,
                                      tmp_table_dir):
         t = DeltaTable(spark, tmp_table_dir).write(
@@ -3244,16 +3235,124 @@ class TestMetadataOnlyJobCounts:
         # building the DataFrame must not scan anything; collecting
         # it runs exactly the local-relation job Spark charges for
         # createDataFrame, never a table read
-        df, jobs = self._jobs_during(
+        df, jobs = jobs_during(
             spark, "show-partitions-probe", t.partitions)
         assert jobs == [], jobs
 
     def test_verify_checksum_is_zero_jobs(self, spark, lineitem,
                                           tmp_table_dir):
         t = DeltaTable(spark, tmp_table_dir).write(lineitem.limit(200))
-        out, jobs = self._jobs_during(
+        out, jobs = jobs_during(
             spark, "verify-checksum-probe", t.verify_checksum)
         assert out == [] and jobs == [], (out, jobs)
+
+
+class TestManifestScanRunsNoJobs:
+    """Past 32 paths Spark looks file statuses up in a listing job of
+    one task per file; a scan built from the manifest must not: the
+    statuses are looked up on the driver, so building the DataFrame
+    runs zero Spark jobs on every read path."""
+
+    THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    N = 400
+
+    def _rows(self, spark):
+        return spark.range(self.N).selectExpr(
+            "id", "cast(id % 2 as int) AS r", "cast(id as double) AS v")
+
+    def _unpartitioned(self, spark, loc):
+        t = DeltaTable(spark, loc).write(self._rows(spark).repartition(40))
+        assert len(t.adds) > 32
+        return t
+
+    def _partitioned(self, spark, loc):
+        t = DeltaTable(spark, loc).write(
+            self._rows(spark).repartition(40), partition_by=["r"])
+        # more than 32 files even after pruning to one partition
+        assert sum(a.partitionValues["r"] == "1"
+                   for a in t.adds.values()) > 32
+        return t
+
+    def _scan_ids(self, spark, group, fn):
+        """Build the scan under ``group``: it must run no Spark job;
+        return the collected ids."""
+        df, jobs = jobs_during(spark, group, fn)
+        assert jobs == [], f"{group}: building the scan ran jobs {jobs}"
+        return sorted(r["id"] for r in df.collect())
+
+    def test_hive_fast_path(self, spark, tmp_table_dir):
+        t = self._partitioned(spark, f"{tmp_table_dir}/t")
+        assert all(t._is_hive_relative(p, ["r"]) for p in t.adds)
+        assert self._scan_ids(spark, "scan-hive", t.to_df) == \
+            list(range(self.N))
+        got = self._scan_ids(
+            spark, "scan-hive-where",
+            lambda: t.to_df(where="r = 1 AND id >= 100"))
+        assert got == [i for i in range(100, self.N) if i % 2 == 1]
+
+    def test_unpartitioned(self, spark, tmp_table_dir):
+        t = self._unpartitioned(spark, f"{tmp_table_dir}/t")
+        assert self._scan_ids(spark, "scan-flat", t.to_df) == \
+            list(range(self.N))
+
+    def test_absolute_path_manifest_of_shallow_clone(self, spark,
+                                                     tmp_table_dir):
+        src = self._partitioned(spark, f"{tmp_table_dir}/src")
+        c = src.clone(f"{tmp_table_dir}/clone")
+        assert not any(c._is_hive_relative(p, ["r"]) for p in c.adds)
+        got = self._scan_ids(spark, "scan-clone", c.to_df)
+        assert got == list(range(self.N))
+        rows = c.to_df().where("id < 4").orderBy("id").collect()
+        assert [(r["id"], r["r"]) for r in rows] == \
+            [(0, 0), (1, 1), (2, 0), (3, 1)]
+
+    def test_deletion_vector_split(self, spark, tmp_table_dir):
+        t = self._unpartitioned(spark, f"{tmp_table_dir}/t")
+        t = t.delete("id % 7 = 0", mode="merge-on-read")
+        dv = [a for a in t.adds.values()
+              if (a.extra or {}).get("deletionVector")]
+        assert len(dv) > 32
+        assert self._scan_ids(spark, "scan-dv", t.to_df) == \
+            [i for i in range(self.N) if i % 7]
+
+    def test_column_mapping_name_mode(self, spark, tmp_table_dir):
+        t = self._partitioned(spark, f"{tmp_table_dir}/t")
+        t = t.enable_column_mapping().rename_column("v", "amount")
+        assert t.column_mapping_mode == "name"
+        assert self._scan_ids(spark, "scan-mapped", t.to_df) == \
+            list(range(self.N))
+        row = t.to_df().where("id = 7").collect()[0]
+        assert (row["amount"], row["r"]) == (7.0, 1)
+
+    def test_session_threshold_is_left_as_it_was(self, spark,
+                                                 tmp_table_dir):
+        t = self._unpartitioned(spark, f"{tmp_table_dir}/t")
+        assert spark.conf.get(self.THRESHOLD, None) is None
+        t.to_df()
+        assert spark.conf.get(self.THRESHOLD, None) is None
+        try:
+            for user in ("64", "8"):
+                spark.conf.set(self.THRESHOLD, user)
+                t.to_df()
+                assert spark.conf.get(self.THRESHOLD, None) == user
+        finally:
+            spark.conf.unset(self.THRESHOLD)
+
+    def test_threshold_restored_when_the_read_raises(self, spark,
+                                                     tmp_table_dir):
+        loc = f"{tmp_table_dir}/t"
+        t = self._unpartitioned(spark, loc)
+        os.remove(os.path.join(loc, sorted(t.adds)[0]))
+        with pytest.raises(Exception, match="PATH_NOT_FOUND"):
+            t.to_df()
+        assert spark.conf.get(self.THRESHOLD, None) is None
+        spark.conf.set(self.THRESHOLD, "8")
+        try:
+            with pytest.raises(Exception, match="PATH_NOT_FOUND"):
+                t.to_df()
+            assert spark.conf.get(self.THRESHOLD, None) == "8"
+        finally:
+            spark.conf.unset(self.THRESHOLD)
 
 
 class TestRecomputeStatsConcurrency:

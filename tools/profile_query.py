@@ -55,7 +55,11 @@ def main() -> None:
         fn = qs[name]
         times = []
         for i in range(n_runs):
-            spark.sparkContext.setJobDescription(f"{name} pass{i}")
+            # select by job group, not description: Spark renames its
+            # file-listing job ("Listing leaf files and directories for
+            # N paths") and keeps only the group
+            group = f"{name} pass{i}"
+            spark.sparkContext.setJobGroup(group, group)
             marker = f"__PROFILE_{name}_{i}__"
             spark.sparkContext.setLocalProperty("callSite.short", marker)
             t0 = time.time()
@@ -98,7 +102,7 @@ def main() -> None:
             if e == "SparkListenerJobStart":
                 props = ev.get("Properties", {})
                 jobs[ev["Job ID"]] = {
-                    "desc": props.get("spark.job.description", ""),
+                    "group": props.get("spark.jobGroup.id", ""),
                     "t0": ev["Submission Time"],
                     "stages": [s["Stage ID"]
                                for s in ev.get("Stage Infos", [])],
@@ -117,7 +121,7 @@ def main() -> None:
 
     for name in names:
         last = f"{name} pass{n_runs - 1}"
-        sel = {j: d for j, d in jobs.items() if d["desc"] == last}
+        sel = {j: d for j, d in jobs.items() if d["group"] == last}
         if not sel:
             continue
         tot = sum(d.get("t1", d["t0"]) - d["t0"] for d in sel.values())

@@ -430,7 +430,7 @@ class DeltaLog:
                 log_location.join(name).read_bytes())
 
         known = set(entries) | set(lazy) | covered
-        if version is not None and known and version not in known:
+        if version is not None and version not in known:
             raise ValueError(f"Version {version} does not exist in log")
         log = cls(entries)
         log._lazy_json = lazy

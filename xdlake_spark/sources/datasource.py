@@ -223,8 +223,6 @@ def _plan_live_snapshot(location_url: str, version: int
     loc = Location.resolve(location_url)
     log = DeltaLog.load(loc.join("_delta_log"), version=version,
                         use_checkpoint=False)
-    if not log:
-        return []
     schema_json = log.schema().json()
     live = log.add_actions()
     return [_FilePartition(

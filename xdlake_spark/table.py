@@ -7,11 +7,13 @@ entire ``DeltaTable``). Architecture per SURVEY §7.1: every operation is
 driver; only the KB-scale JSON log and the file manifest do.
 
 Scale design (100 TB / 1000 executors):
-- Scans are a single ``spark.read.schema(...).parquet(*files)`` over the
-  manifest's live files — Catalyst handles predicate pushdown, column
+- Scans are a single parquet relation over the manifest's live files
+  (``_read_files``) — Catalyst handles predicate pushdown, column
   pruning, and row-group skipping; the driver additionally prunes whole
   files from the manifest with partition values + min/max stats
-  (plans/skipping.py) *before* a plan exists.
+  (plans/skipping.py) *before* a plan exists. File statuses are looked
+  up on the driver from the manifest's list, never by Spark's listing
+  job (one task per file past 32 files, about 6 ms a file on 4 cores).
 - Writes go straight from executors to the table directory via
   ``df.write.partitionBy(...).parquet`` — hive layout identical to the
   reference (/root/reference/xdlake/__init__.py:381-394).
@@ -74,6 +76,23 @@ _logger = logging.getLogger(__name__)
 
 
 @contextlib.contextmanager
+def _scoped_conf(spark, settings: dict[str, str]):
+    """Set session confs for the body only: afterwards (also when the
+    body raises) each key gets its previous value back, or is unset
+    again when it was unset."""
+    prev = {k: spark.conf.get(k, None) for k in settings}
+    for k, v in settings.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, old in prev.items():
+            if old is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, old)
+
+
 def _arrow_conversion(spark):
     """Temporarily enable Arrow for driver<->JVM DataFrame conversion
     (createDataFrame-from-pandas / toPandas). The pickled-row fallback
@@ -81,18 +100,34 @@ def _arrow_conversion(spark):
     per value — seconds of driver time at tens of thousands of rows
     (guide §6: arrow.pyspark.enabled is the documented fix; scoped here
     so the session's other conversions keep configured behavior)."""
-    key = "spark.sql.execution.arrow.pyspark.enabled"
-    old = None
-    try:
-        old = spark.conf.get(key)
-    except Exception:
-        pass
-    spark.conf.set(key, "true")
-    try:
-        yield
-    finally:
-        if old is not None:
-            spark.conf.set(key, old)
+    return _scoped_conf(
+        spark, {"spark.sql.execution.arrow.pyspark.enabled": "true"})
+
+
+_LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+
+
+def _read_files(spark, files: "list[str]",
+                schema: "T.StructType | None" = None,
+                base_path: "str | None" = None) -> DataFrame:
+    """The one parquet relation over file URLs the manifest names.
+
+    The log already lists every file, so nothing is listed here. Spark,
+    given more paths than ``parallelPartitionDiscovery.threshold``
+    (32), would look their statuses up in a Spark job of one task per
+    path — about 6 ms a file on a 4-core host (``local[2]``): building
+    a scan over 103 files took 0.8 s. The threshold is raised to the
+    path count for this one ``parquet()`` call, which builds its file
+    index eagerly, so the statuses are looked up on the driver instead
+    (0.07 s for the same scan)."""
+    reader = spark.read
+    if schema is not None:
+        reader = reader.schema(schema)
+    if base_path is not None:
+        reader = reader.option("basePath", base_path)
+    need = max(len(files), int(spark.conf.get(_LISTING_THRESHOLD)))
+    with _scoped_conf(spark, {_LISTING_THRESHOLD: str(need)}):
+        return reader.parquet(*files)
 
 
 class CommitConflictError(FileExistsError):
@@ -400,7 +435,7 @@ class DeltaTable:
 
         if not pcols:
             files = [self.location.absloc(p).url for p in adds]
-            return self.spark.read.schema(schema).parquet(*files)
+            return _read_files(self.spark, files, schema)
 
         # Fast path: every live file is table-relative in hive layout ->
         # ONE parquet relation with basePath; Spark derives partition
@@ -408,9 +443,8 @@ class DeltaTable:
         # dynamic partition pruning).
         if all(self._is_hive_relative(p, pcols) for p in adds):
             files = [self.location.join(p).url for p in adds]
-            df = (self.spark.read.schema(schema)
-                  .option("basePath", self.location.url)
-                  .parquet(*files))
+            df = _read_files(self.spark, files, schema,
+                             base_path=self.location.url)
             return df.select(schema.fieldNames())
 
         # General path (clone / import_refs absolute paths, foreign
@@ -427,7 +461,7 @@ class DeltaTable:
             [T.StructField("__xdl_path", T.StringType())]
             + [T.StructField(f"__pv_{c}", T.StringType()) for c in pcols])
         manifest = self.spark.createDataFrame(mrows, mschema)
-        scan = self.spark.read.schema(data_schema).parquet(*files)
+        scan = _read_files(self.spark, files, data_schema)
         raw = F.regexp_replace(F.input_file_name(), "^[a-zA-Z0-9+.-]+://?", "/")
         raw = F.regexp_replace(raw, "^//+", "/")
         scan = scan.withColumn(
@@ -502,7 +536,7 @@ class DeltaTable:
                 T.StructField(phys[f.name], f.dataType, f.nullable)
                 for f in data_fields])
         files = [self.location.absloc(p).url for p in adds]
-        scan = self.spark.read.schema(phys_schema).parquet(*files)
+        scan = _read_files(self.spark, files, phys_schema)
         renamed = [F.col(phys[f.name]).alias(f.name) for f in data_fields]
         if not pcols:
             return scan.select(renamed)
@@ -756,7 +790,7 @@ class DeltaTable:
                 cdc_schema = T.StructType(
                     list(schema.fields)
                     + [T.StructField(self._CHANGE_TYPE, T.StringType())])
-                df = self.spark.read.schema(cdc_schema).parquet(*files)
+                df = _read_files(self.spark, files, cdc_schema)
                 # hive-partitioned cdc files: re-attach partition values
                 pcols = [c for c in self.partition_columns if c in cols]
                 if pcols:
@@ -1499,7 +1533,7 @@ class DeltaTable:
             + [T.StructField(f"__pv_{c}", T.StringType())
                for c in pcols])
         manifest = self.spark.createDataFrame(mrows, mschema)
-        scan = (self.spark.read.schema(data_schema).parquet(*files)
+        scan = (_read_files(self.spark, files, data_schema)
                 .withColumn("__xdl_pos", F.col("_metadata.row_index")))
         raw = F.regexp_replace(F.input_file_name(),
                                "^[a-zA-Z0-9+.-]+://?", "/")
@@ -1869,7 +1903,7 @@ class DeltaTable:
                 # next write would regenerate the same values
                 files = [self.location.absloc(p).url for p in missing]
                 agg = F.max(f.name) if step > 0 else F.min(f.name)
-                row = (self.spark.read.parquet(*files)
+                row = (_read_files(self.spark, files)
                        .agg(agg.alias("v")).collect()[0])
                 if row["v"] is not None:
                     vals.append(int(row["v"]))
@@ -2097,23 +2131,13 @@ class DeltaTable:
                 "replaceWhere: written data contains rows that do "
                 f"not match the predicate {replace_where!r}")).isNull())
 
+        advisory = {}
         if optimize_write:
             df = self._optimize_write_partitions(df, partition_by,
                                                  target_file_size)
-            _ADV = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-            prev_adv = self.spark.conf.get(_ADV, None)
-            self.spark.conf.set(_ADV, str(target_file_size))
-            try:
-                new_adds = self._write_data(
-                    self._apply_constraints(df), partition_by,
-                    max_records_per_file=max_records_per_file,
-                    write_options=write_options)
-            finally:
-                if prev_adv is None:
-                    self.spark.conf.unset(_ADV)
-                else:
-                    self.spark.conf.set(_ADV, prev_adv)
-        else:
+            advisory = {"spark.sql.adaptive.advisoryPartitionSizeInBytes":
+                        str(target_file_size)}
+        with _scoped_conf(self.spark, advisory):
             new_adds = self._write_data(
                 self._apply_constraints(df), partition_by,
                 max_records_per_file=max_records_per_file,
@@ -2502,7 +2526,7 @@ class DeltaTable:
         # number of jobs regardless of file count (plan-pinned)
         file_schema = T.StructType(
             [f for f in schema.fields if f.name not in partition_by])
-        rows = (self.spark.read.schema(file_schema).parquet(*paths)
+        rows = (_read_files(self.spark, paths, file_schema)
                 .groupBy(F.col("_metadata.file_path").alias("__f"))
                 .agg(*aggs).collect())
         keep = self._stats_columns()
@@ -4482,7 +4506,7 @@ class DeltaTable:
                 continue
             dd = None
             for d in group:
-                one = (self.spark.read.parquet(d["path"])
+                one = (_read_files(self.spark, [d["path"]])
                        .select(*[F.col(c).alias(f"__d_{c}")
                                  for c in cols])
                        .withColumn("__dseq",
@@ -4499,7 +4523,7 @@ class DeltaTable:
             seq_df = self.spark.createDataFrame(
                 [(_norm_uri(p), int(s)) for p, s in affected.items()],
                 "__nfp string, __fseq long")
-            data = (self.spark.read.parquet(*sorted(affected))
+            data = (_read_files(self.spark, sorted(affected))
                     .select(
                         F.regexp_replace(
                             F.regexp_replace(
